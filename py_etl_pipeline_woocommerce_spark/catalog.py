@@ -110,25 +110,26 @@ def register_model_views(
     pushdown/pruning, and a filter on a view prunes the underlying
     parquet scan like the hand-built DataFrame would.
 
-    Cost note: registration ITSELF performs ~20 base-table loads
-    (each mart builder calls load_table, and a parquet load eagerly
-    lists files + reads footers) — a one-time per-session cost that
-    is trivial here but visible on a lake with thousands of files per
-    table; if that ever matters, thread ``load_all``'s dict through
-    the mart builders instead of the (spark, sf_dir) pair.
+    Registration loads each base table once: the mart builders take
+    their tables from ``register_views``' dict instead of loading
+    their own (a parquet load eagerly lists files and reads footers,
+    which on a lake with thousands of files per table is the cost).
     """
     from .plans import analytics, woo_model
 
     dfs = register_views(spark, sf_dir)
+    table = dfs.__getitem__
     model = {
-        "fct_orders": woo_model.fct_orders(spark, sf_dir),
-        "fct_order_items": woo_model.fct_order_items(spark, sf_dir),
-        "mart_date_bounds": analytics.date_bounds(spark, sf_dir),
-        "mart_kpis": analytics.kpis(spark, sf_dir),
-        "mart_revenue_timeseries": analytics.revenue_timeseries(spark, sf_dir),
-        "mart_top_products": analytics.top_products(spark, sf_dir),
-        "mart_category_mix": analytics.category_mix(spark, sf_dir),
-        "mart_geo_rollup": analytics.geo_rollup(spark, sf_dir),
+        "fct_orders": woo_model.build_fct_orders(dfs["orders"], dfs["lineitem"]),
+        "fct_order_items": woo_model.build_fct_order_items(
+            dfs["lineitem"], dfs["part"]
+        ),
+        "mart_date_bounds": analytics.build_date_bounds(table),
+        "mart_kpis": analytics.build_kpis(table),
+        "mart_revenue_timeseries": analytics.build_revenue_timeseries(table),
+        "mart_top_products": analytics.build_top_products(table),
+        "mart_category_mix": analytics.build_category_mix(table),
+        "mart_geo_rollup": analytics.build_geo_rollup(table),
     }
     for name, df in model.items():
         df.createOrReplaceTempView(name)

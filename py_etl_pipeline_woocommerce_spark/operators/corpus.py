@@ -2115,14 +2115,15 @@ def hybrid_search(
     Lexical = ``bm25_search`` top-``stage_k``; semantic = sparse
     relational cosine over ``hash_embed`` vectors for the SAME query
     docs (the ``doc_similarity_topk`` construction) top-``stage_k``.
-    Fusion is one full-outer join of two (query, ≤stage_k)-row
-    frames — trivially small next to either retrieval — and every
+    Fusion is a ``unionByName`` of the two (query, ≤stage_k)-row
+    frames plus one (query, doc) aggregate summing the RRF addends —
+    trivially small next to either retrieval — and every
     contribution is ``1.0/(int + int)`` then rounded, so the fused
     ranking is engine-exact.
 
     Scale: both stages are verified linear-ish plans; at serving
     scale swap the semantic stage for ``ann_rerank_topk`` over real
-    embeddings — the fusion join is unchanged (rank columns are the
+    embeddings — the fusion is unchanged (rank columns are the
     whole interface). ``query_ids`` pins a FIXED query batch (the
     serving shape: constant query load over a growing corpus); the
     default ``every``-sampling grows the query set with the corpus —

@@ -2,9 +2,13 @@
 Streamlit app (``/root/reference/src/dashboard/app.py``), re-expressed
 as Spark plans over the star schema.
 
-Each function takes ``(spark, sf_dir)`` and returns a DataFrame whose
-column names match the ``oracle_sql()`` twin exactly (driver hashes
-sort columns by name).
+Each frame has a builder, ``build_<frame>(table, ...)``, over
+``table``: a catalog loader from ``tables`` (or any name → DataFrame
+lookup, such as ``catalog.register_views``' dict). The public
+``<frame>(spark, sf_dir, ...)`` function loads its own tables and calls
+the builder; ``dashboard_payload`` shares one loader across a whole
+page. Every frame's column names match the ``oracle_sql()`` twin
+exactly (the correctness harness sorts columns by name).
 
 Determinism: money aggregates run in exact decimal end-to-end and the
 ordering keys for every LIMIT are (exact-decimal metric, name) so the
@@ -17,6 +21,8 @@ date filters push to the parquet scan.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
 from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +31,25 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.money import disc_price
 from ..operators.refunds import REFUND_FLAG
+
+#: A catalog table by name.
+TableLookup = Callable[[str], DataFrame]
+
+
+def tables(spark: SparkSession, sf_dir: str) -> TableLookup:
+    """A loader that reads each catalog table at most once over its
+    own lifetime. A parquet load lists the table's files eagerly (on
+    a month-partitioned ``orders``, one Spark job over every
+    partition directory), so frames built from one loader share one
+    listing; each frame still prunes partitions from that cached
+    listing with its own filters.
+
+    Keep a loader for one request only: the ingest rewrites month
+    partitions, so a listing held across requests would serve stale
+    or deleted files.
+    """
+    return functools.cache(lambda name: load_table(spark, sf_dir, name))
+
 
 # Net revenue of a line, zero for refunded lines — the lineitem-grain
 # equivalent of app.py's `total - COALESCE(refunded_total, 0)`.
@@ -86,13 +111,30 @@ def _bound_orders(orders: DataFrame, d1: str | None, d2: str | None) -> DataFram
     return orders
 
 
+def _window_lines(table: TableLookup, d1: str | None, d2: str | None) -> DataFrame:
+    """lineitem restricted to the window's orders by a semi-join on
+    the date-filtered (scan-pushed) order keys; every line when the
+    window is open on both ends."""
+    lineitem = table("lineitem")
+    if d1 is None and d2 is None:
+        return lineitem
+    keys = _bound_orders(table("orders"), d1, d2).select(
+        F.col("o_orderkey").alias("l_orderkey")
+    )
+    return lineitem.join(keys, "l_orderkey", "left_semi")
+
+
 def date_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return build_date_bounds(tables(spark, sf_dir))
+
+
+def build_date_bounds(table: TableLookup) -> DataFrame:
     """min/max order date (app.py:10-22 ``fetch_date_bounds``),
     including the reference's empty-table fallback: no orders →
     (today − 30 days, today). ``current_date`` only evaluates on the
     empty branch, so the populated-table result stays deterministic
     and engine-exact."""
-    orders = load_table(spark, sf_dir, "orders")
+    orders = table("orders")
     d = F.date_format("o_orderdate", "yyyy-MM-dd")
     iso = "yyyy-MM-dd"
     return orders.agg(
@@ -112,6 +154,12 @@ def kpis(
     d1: str | None = None,
     d2: str | None = None,
 ) -> DataFrame:
+    return build_kpis(tables(spark, sf_dir), d1, d2)
+
+
+def build_kpis(
+    table: TableLookup, d1: str | None = None, d2: str | None = None
+) -> DataFrame:
     """Headline KPIs (app.py:24-45 ``load_kpis``): order count, net
     before refunds, refund total, net after refunds, AOV.
 
@@ -125,11 +173,8 @@ def kpis(
     date-filtered (scan-pushed) orders projection; the order count is
     a second 1-row aggregate of the same pruned scan, broadcast in.
     """
-    orders = _bound_orders(load_table(spark, sf_dir, "orders"), d1, d2)
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    if d1 is not None or d2 is not None:
-        keys = orders.select(F.col("o_orderkey").alias("l_orderkey"))
-        lineitem = lineitem.join(keys, "l_orderkey", "left_semi")
+    orders = _bound_orders(table("orders"), d1, d2)
+    lineitem = _window_lines(table, d1, d2)
     o_cnt = orders.agg(F.count(F.lit(1)).alias("orders_cnt"))
     agg = lineitem.agg(
         F.sum(disc_price()).alias("_net"),
@@ -169,12 +214,18 @@ def revenue_timeseries(
     d1: str | None = None,
     d2: str | None = None,
 ) -> DataFrame:
+    return build_revenue_timeseries(tables(spark, sf_dir), d1, d2)
+
+
+def build_revenue_timeseries(
+    table: TableLookup, d1: str | None = None, d2: str | None = None
+) -> DataFrame:
     """Net revenue per order date (app.py:47-62 ``load_timeseries``),
     optionally bounded to ``[d1, d2]`` like the dashboard's sidebar."""
-    orders = _bound_orders(load_table(spark, sf_dir, "orders"), d1, d2).select(
+    orders = _bound_orders(table("orders"), d1, d2).select(
         "o_orderkey", F.date_format("o_orderdate", "yyyy-MM-dd").alias("d")
     )
-    lineitem = load_table(spark, sf_dir, "lineitem")
+    lineitem = table("lineitem")
     return (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .groupBy("d")
@@ -190,6 +241,15 @@ def top_products(
     d1: str | None = None,
     d2: str | None = None,
 ) -> DataFrame:
+    return build_top_products(tables(spark, sf_dir), limit, d1, d2)
+
+
+def build_top_products(
+    table: TableLookup,
+    limit: int = 15,
+    d1: str | None = None,
+    d2: str | None = None,
+) -> DataFrame:
     """Top products by refund-net revenue (app.py:64-81
     ``load_top_products``): name, revenue, qty_sold.
 
@@ -198,13 +258,8 @@ def top_products(
     LIMIT is globally deterministic via (revenue DESC, name ASC) on
     the exact decimal metric.
     """
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    if d1 is not None or d2 is not None:
-        keys = _bound_orders(
-            load_table(spark, sf_dir, "orders"), d1, d2
-        ).select(F.col("o_orderkey").alias("l_orderkey"))
-        lineitem = lineitem.join(keys, "l_orderkey", "left_semi")
-    part = load_table(spark, sf_dir, "part").select(
+    lineitem = _window_lines(table, d1, d2)
+    part = table("part").select(
         F.col("p_partkey"), F.col("p_name").alias("name")
     )
     not_ref = ~F.col("l_returnflag").eqNullSafe(REFUND_FLAG)
@@ -247,16 +302,20 @@ def category_mix(
     d1: str | None = None,
     d2: str | None = None,
 ) -> DataFrame:
+    return build_category_mix(tables(spark, sf_dir), limit, d1, d2)
+
+
+def build_category_mix(
+    table: TableLookup,
+    limit: int = 15,
+    d1: str | None = None,
+    d2: str | None = None,
+) -> DataFrame:
     """Revenue by product category (app.py:83-99 ``load_category_mix``)
     — category := p_type (the snapshot string of ``operators.enrich``);
     optional order-date window as in ``top_products``."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    if d1 is not None or d2 is not None:
-        keys = _bound_orders(
-            load_table(spark, sf_dir, "orders"), d1, d2
-        ).select(F.col("o_orderkey").alias("l_orderkey"))
-        lineitem = lineitem.join(keys, "l_orderkey", "left_semi")
-    part = load_table(spark, sf_dir, "part").select(
+    lineitem = _window_lines(table, d1, d2)
+    part = table("part").select(
         F.col("p_partkey"), F.col("p_type").alias("category")
     )
     # LEFT join + 'Uncategorized' bucket: app.py's
@@ -288,6 +347,15 @@ def geo_rollup(
     d1: str | None = None,
     d2: str | None = None,
 ) -> DataFrame:
+    return build_geo_rollup(tables(spark, sf_dir), limit, d1, d2)
+
+
+def build_geo_rollup(
+    table: TableLookup,
+    limit: int = 20,
+    d1: str | None = None,
+    d2: str | None = None,
+) -> DataFrame:
     """Orders + net by geography (app.py:101-119 ``load_geo``) —
     country/city become nation/region in the star schema.
 
@@ -307,16 +375,13 @@ def geo_rollup(
     aggregate would shuffle 100% of lineitem to keep the window's
     slice).
     """
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = _bound_orders(load_table(spark, sf_dir, "orders"), d1, d2).select(
+    lineitem = _window_lines(table, d1, d2)
+    orders = _bound_orders(table("orders"), d1, d2).select(
         "o_orderkey", "o_custkey"
     )
-    if d1 is not None or d2 is not None:
-        keys = orders.select(F.col("o_orderkey").alias("l_orderkey"))
-        lineitem = lineitem.join(keys, "l_orderkey", "left_semi")
-    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
+    customer = table("customer").select("c_custkey", "c_nationkey")
+    nation = table("nation")
+    region = table("region")
 
     per_order = lineitem.groupBy(F.col("l_orderkey").alias("o_orderkey")).agg(
         F.sum(_net_line()).alias("_order_net")
@@ -353,6 +418,10 @@ def geo_rollup(
 
 
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return build_cohort_retention(tables(spark, sf_dir))
+
+
+def build_cohort_retention(table: TableLookup) -> DataFrame:
     """Monthly acquisition-cohort retention: customers grouped by the
     month of their first order; for each (cohort, months-since) cell,
     how many of them ordered and how many orders they placed.
@@ -363,7 +432,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Month index is integer year*12+month arithmetic — no interval
     semantics to disagree over between engines.
     """
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
+    orders = table("orders").select("o_custkey", "o_orderdate")
     first = orders.groupBy("o_custkey").agg(F.min("o_orderdate").alias("_fd"))
     month_num = lambda c: F.year(c) * 12 + F.month(c)  # noqa: E731
     joined = orders.join(first, "o_custkey")

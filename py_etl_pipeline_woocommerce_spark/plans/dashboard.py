@@ -14,9 +14,14 @@ Defaulting the window from ``date_bounds`` mirrors ``app.py``'s
 sidebar initialization.
 
 Scale note: each frame stays an independent Catalyst plan, so a
-server can materialize them concurrently; the shared (d1, d2)
-bounds push down (and partition-prune on month-partitioned layouts)
-identically in every frame via ``_bound_orders``.
+server can materialize them concurrently, but all of them read ONE
+catalog snapshot per page: every table is loaded once per call and
+shared by the frames that use it (one file listing of the
+month-partitioned ``orders`` instead of one per frame). The shared
+(d1, d2) bounds still push down, and partition-prune from that one
+listing, identically in every frame via ``_bound_orders``. The
+snapshot lives only as long as the call: the next page loads afresh
+and sees partitions the ingest rewrote in between.
 """
 
 from __future__ import annotations
@@ -24,13 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .analytics import (
-    category_mix,
-    cohort_retention,
-    date_bounds,
-    geo_rollup,
-    kpis,
-    revenue_timeseries,
-    top_products,
+    build_category_mix,
+    build_cohort_retention,
+    build_date_bounds,
+    build_geo_rollup,
+    build_kpis,
+    build_revenue_timeseries,
+    build_top_products,
+    tables,
 )
 
 
@@ -47,7 +53,8 @@ def dashboard_payload(
     d2 from the data's max order date, d1 = max(min_d, max_d − 30d)
     — so a user comparing default pages sees the same numbers.
     """
-    bounds_frame = date_bounds(spark, sf_dir)
+    table = tables(spark, sf_dir)
+    bounds_frame = build_date_bounds(table)
     if d1 is None or d2 is None:
         from datetime import date, timedelta
 
@@ -83,12 +90,12 @@ def dashboard_payload(
         )
     return {
         "date_bounds": bounds_frame,
-        "kpis": kpis(spark, sf_dir, d1, d2),
-        "revenue_timeseries": revenue_timeseries(spark, sf_dir, d1, d2),
-        "top_products": top_products(spark, sf_dir, d1=d1, d2=d2),
-        "category_mix": category_mix(spark, sf_dir, d1=d1, d2=d2),
-        "geo_rollup": geo_rollup(spark, sf_dir, d1=d1, d2=d2),
-        "cohort_retention": cohort_retention(spark, sf_dir),
+        "kpis": build_kpis(table, d1, d2),
+        "revenue_timeseries": build_revenue_timeseries(table, d1, d2),
+        "top_products": build_top_products(table, d1=d1, d2=d2),
+        "category_mix": build_category_mix(table, d1=d1, d2=d2),
+        "geo_rollup": build_geo_rollup(table, d1=d1, d2=d2),
+        "cohort_retention": build_cohort_retention(table),
     }
 
 

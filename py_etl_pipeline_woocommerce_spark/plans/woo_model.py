@@ -55,14 +55,18 @@ def order_money_aggregates(lineitem: DataFrame) -> DataFrame:
 
 
 def fct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return build_fct_orders(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
+    )
+
+
+def build_fct_orders(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Order-grain fact with refund-aware money (ddl.sql fct_orders).
 
     Columns: order_id, order_date, status, customer_id,
     order_priority, gross_total, total_tax, net_total, refund_total,
     net_after_refunds, n_items.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
     headers = normalize_orders(orders).drop("gross_total", "net_total", "refund_total")
     agg = order_money_aggregates(lineitem)
     # LEFT join: the reference emits EVERY order header (its own
@@ -81,16 +85,22 @@ def fct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def fct_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return build_fct_order_items(
+        load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "part")
+    )
+
+
+def build_fct_order_items(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """Line-grain fact: normalize -> enrich -> refunds
     (ddl.sql fct_order_items; pipeline order mirrors run.py:31-47)."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
     items = normalize_items(lineitem)
     items = enrich_items_with_categories(items, part)
     return apply_refunds_items(items)
 
 
 __all__ = [
+    "build_fct_order_items",
+    "build_fct_orders",
     "fct_orders",
     "fct_order_items",
     "order_money_aggregates",

@@ -135,3 +135,32 @@ def test_dashboard_payload_normalizes_noncanonical_d2(spark, sf_dir):
     # the window is non-empty: the kpis frame reports orders
     kp = frames["kpis"].collect()[0]
     assert kp["orders_cnt"] > 0
+
+
+def test_dashboard_payload_loads_each_table_once_per_call(
+    spark, sf_dir, monkeypatch
+):
+    # One catalog snapshot per page: the seven frames share one load
+    # per table (a month-partitioned orders load is a file listing
+    # over every partition), and the next call loads afresh so a page
+    # never serves a listing the ingest has since rewritten.
+    from collections import Counter
+
+    from py_etl_pipeline_woocommerce_spark.plans import analytics
+
+    loads = Counter()
+    real = analytics.load_table
+
+    def counting(spark_, sf_dir_, name):
+        loads[name] += 1
+        return real(spark_, sf_dir_, name)
+
+    monkeypatch.setattr(analytics, "load_table", counting)
+    six = {"orders", "lineitem", "part", "customer", "nation", "region"}
+    for window in ((None, None), ("1995-01-01", "1995-12-31")):
+        loads.clear()
+        dashboard_payload(spark, sf_dir, *window)
+        assert set(loads) == six, window
+        assert max(loads.values()) == 1, (window, loads)
+        dashboard_payload(spark, sf_dir, *window)
+        assert all(n == 2 for n in loads.values()), (window, loads)

@@ -448,6 +448,74 @@ def test_bounded_dashboard_prunes_date_partitions(spark, sf_dir, tmp_path):
     assert n_bounded == n_expected
 
 
+def _scan_blocks(plan: str, table: str) -> list[str]:
+    """The formatted-plan detail blocks of every parquet scan over
+    ``table``'s files (one per scan node, up to the next blank line)."""
+    blocks = [b.split("\n\n", 1)[0] for b in plan.split("Scan parquet")[1:]]
+    return [b for b in blocks if f"{table}.parquet" in b]
+
+
+def test_shared_orders_dashboard_frames_keep_partition_pruning(
+    spark, sf_dir, tmp_path
+):
+    # dashboard_payload builds every frame over ONE orders load per
+    # page; each windowed frame must still prune month partitions from
+    # that shared listing (PartitionFilters) and push its row bounds
+    # (PushedFilters) in every orders scan, and must equal the public
+    # per-frame function, which loads its own orders, on the same
+    # window.
+    import os
+
+    from pyspark.sql import functions as F
+
+    from py_etl_pipeline_woocommerce_spark.catalog import TABLES, load_table
+    from py_etl_pipeline_woocommerce_spark.plans import analytics
+    from py_etl_pipeline_woocommerce_spark.plans.dashboard import (
+        dashboard_payload,
+    )
+
+    wh = str(tmp_path / "sf_by_month")
+    os.makedirs(wh)
+    for t in TABLES:
+        if t != "orders":
+            os.symlink(
+                os.path.join(sf_dir, f"{t}.parquet"),
+                os.path.join(wh, f"{t}.parquet"),
+            )
+    (
+        load_table(spark, sf_dir, "orders")
+        .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
+        .write.partitionBy("o_month")
+        .parquet(os.path.join(wh, "orders.parquet"))
+    )
+    d1, d2 = "1995-01-01", "1996-12-31"
+    payload = dashboard_payload(spark, wh, d1, d2)
+    for name in (
+        "kpis", "revenue_timeseries", "top_products", "category_mix",
+        "geo_rollup",
+    ):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            payload[name].explain("formatted")
+        scans = _scan_blocks(buf.getvalue(), "orders")
+        assert scans, (name, buf.getvalue())
+        for scan in scans:
+            fields = dict(
+                ln.split(": ", 1) for ln in scan.splitlines() if ": " in ln
+            )
+            assert "o_month" in fields.get("PartitionFilters", ""), (name, scan)
+            assert "o_orderdate" in fields.get("PushedFilters", ""), (name, scan)
+        own = getattr(analytics, name)(spark, wh, d1=d1, d2=d2)
+        assert sorted(payload[name].collect(), key=str) == sorted(
+            own.collect(), key=str
+        ), name
+    for name in ("date_bounds", "cohort_retention"):
+        own = getattr(analytics, name)(spark, wh)
+        assert sorted(payload[name].collect(), key=str) == sorted(
+            own.collect(), key=str
+        ), name
+
+
 def test_closing_wave_shuffle_budgets(plans):
     """Pin the shuffle shapes the round-4 closing wave was designed
     around: interval union does ONE user shuffle with both windows
